@@ -111,16 +111,6 @@ def get_link_density(element: Element) -> float:
     return density
 
 
-def get_text_density(element: Element, tags: tuple[str, ...]) -> float:
-    text_length = len(get_inner_text(element, True))
-    if text_length == 0:
-        return 0.0
-    children_length = sum(
-        len(get_inner_text(child, True)) for child in element.get_elements_by_tag(*tags)
-    )
-    return children_length / text_length
-
-
 def is_whitespace(node: Node) -> bool:
     if isinstance(node, TextNode):
         return len(js_trim(node.data)) == 0

@@ -232,46 +232,40 @@ def _null_safe_i64(values, texts):
     return pa.array(values, type=pa.int64())
 
 
-def _simhash_batches(it):
-    import pyarrow as pa
+def _simhash_batches(cols):
+    """SimHash kernel packing one 32-bit word per name in ``cols``: word
+    j votes over md5 digest bytes 4j..4j+3 (hex chars 8j+1..8j+8) of
+    each word's hash, so one md5 per word feeds every fingerprint word
+    and word 0 is always the 32-bit ``simhash``."""
+    k = len(cols)
 
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, counts, bounds = _tokenize_batch(texts)
-        h = _md5_u64(w for ws in words_per_doc if ws for w in ws)
-        fp = _vote32(h, counts, bounds)
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), _null_safe_i64(fp, texts)],
-            ["doc_id", "simhash"],
-        )
+    def run(it):
+        from hashlib import md5
 
+        import numpy as np
+        import pyarrow as pa
 
-def _simhash_wide_batches(it):
-    from hashlib import md5
+        for batch in it:
+            texts = batch.column("text").to_pylist()
+            words_per_doc, counts, bounds = _tokenize_batch(texts)
+            buf = b"".join(
+                md5(w.encode()).digest()[: 4 * k]
+                for ws in words_per_doc
+                if ws
+                for w in ws
+            )
+            h = np.frombuffer(buf, dtype=">u4").astype(np.uint64).reshape(-1, k)
+            fps = [
+                _null_safe_i64(
+                    _vote32(np.ascontiguousarray(h[:, j]), counts, bounds), texts
+                )
+                for j in range(k)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), *fps], ["doc_id", *cols]
+            )
 
-    import numpy as np
-    import pyarrow as pa
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, counts, bounds = _tokenize_batch(texts)
-        buf = b"".join(
-            md5(w.encode()).digest()[:8]
-            for ws in words_per_doc
-            if ws
-            for w in ws
-        )
-        both = np.frombuffer(buf, dtype=">u4").astype(np.uint64).reshape(-1, 2)
-        fp_lo = _vote32(np.ascontiguousarray(both[:, 0]), counts, bounds)
-        fp_hi = _vote32(np.ascontiguousarray(both[:, 1]), counts, bounds)
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                _null_safe_i64(fp_lo, texts),
-                _null_safe_i64(fp_hi, texts),
-            ],
-            ["doc_id", "fp_lo", "fp_hi"],
-        )
+    return run
 
 
 def _shingles_for(words):
@@ -310,67 +304,86 @@ def _shingle_hash_batches(it):
         )
 
 
-def _bucket_hamming_batches(it):
-    """Per Hamming-band bucket: expand member pairs and keep those with
-    XOR-popcount <= SIMHASH_MAX_HAMMING, vectorized over the bucket's
-    pair matrix.  Members arrive sorted (sort_array upstream), so
-    emitted pairs keep doc_a < doc_b exactly like the lambda form;
-    null-fingerprint members are skipped (the lambda form paired them
-    and then dropped the null hamming).
+def _bucket_hamming_batches(max_hamming):
+    """Kernel factory.  Per Hamming-band bucket: expand member pairs
+    and keep those with XOR-popcount <= ``max_hamming``, vectorized over
+    the bucket's pair matrix.  A member is ``(doc_id, w_1 .. w_k)``:
+    every field after ``doc_id`` is one 32-bit fingerprint word
+    (``simhash``, or ``fp_lo``/``fp_hi``), and a pair's distance is the
+    popcount summed over the words.  Members arrive sorted (sort_array upstream), so
+    emitted pairs keep doc_a < doc_b; members with a null fingerprint
+    word are skipped.  A word outside [0, 2^32) raises ValueError
+    naming its field instead of wrapping in the uint32 cast.
 
     r07 session 3 (measured: the synthetic corpus concentrates 200k
     banded rows into <1k buckets — 189M pair slots, max bucket 3404):
-    fingerprints are 32-bit, so the XOR runs in uint32 and popcount is
-    two 16-bit-LUT gathers + add (the 8-bit-LUT uint64 view paid 4x
-    the memory traffic); the pair matrix is row-CHUNKED to a bounded
-    slot budget (a degenerate bucket cannot allocate an n^2 buffer);
-    survivors are emitted by boolean indexing, not a per-pair Python
-    loop (~3.3M qualifying pairs here)."""
-    import numpy as np
-    import pyarrow as pa
+    the XOR runs in uint32 and popcount is two 16-bit-LUT gathers + add
+    per word (the 8-bit-LUT uint64 view paid 4x the memory traffic);
+    the pair matrix is row-CHUNKED to a bounded slot budget (a
+    degenerate bucket cannot allocate an n^2 buffer); survivors are
+    emitted by boolean indexing, not a per-pair Python loop (~3.3M
+    qualifying pairs here)."""
 
-    _lut8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-    a16 = np.arange(65536, dtype=np.uint32)
-    _lut16 = (_lut8[a16 & 255] + _lut8[a16 >> 8]).astype(np.uint8)
-    CHUNK_SLOTS = 4_000_000
+    def run(it):
+        import numpy as np
+        import pyarrow as pa
 
-    for batch in it:
-        id_type = batch.schema.field("members").type.value_type.field(
-            "doc_id"
-        ).type
-        out_a, out_b, out_h = [], [], []
-        for members in batch.column("members").to_pylist():
-            live = [m for m in members if m["simhash"] is not None]
-            n = len(live)
-            if n < 2:
-                continue
-            ids_np = np.array([m["doc_id"] for m in live])
-            fps = np.array([m["simhash"] for m in live], dtype=np.uint32)
-            rows_per_chunk = max(CHUNK_SLOTS // n, 1)
-            for lo in range(0, n - 1, rows_per_chunk):
-                hi = min(lo + rows_per_chunk, n - 1)
-                x = fps[lo:hi, None] ^ fps[None, :]
-                hm = _lut16[x & np.uint32(0xFFFF)] + _lut16[
-                    x >> np.uint32(16)
-                ]
-                # upper triangle only: column index > global row index
-                mask = hm <= SIMHASH_MAX_HAMMING
-                cols = np.arange(n)[None, :]
-                rows = np.arange(lo, hi)[:, None]
-                mask &= cols > rows
-                ri, ci = np.nonzero(mask)
-                if len(ri):
-                    out_a.extend(ids_np[ri + lo].tolist())
-                    out_b.extend(ids_np[ci].tolist())
-                    out_h.extend(hm[ri, ci].tolist())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_a, type=id_type),
-                pa.array(out_b, type=id_type),
-                pa.array(out_h, type=pa.int32()),
-            ],
-            ["doc_a", "doc_b", "hamming"],
-        )
+        _lut8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+        a16 = np.arange(65536, dtype=np.uint32)
+        _lut16 = (_lut8[a16 & 255] + _lut8[a16 >> 8]).astype(np.uint8)
+        CHUNK_SLOTS = 4_000_000
+
+        def pair_popcount(f, lo, hi):
+            x = f[lo:hi, None] ^ f[None, :]
+            return _lut16[x & np.uint32(0xFFFF)] + _lut16[x >> np.uint32(16)]
+
+        for batch in it:
+            member_t = batch.schema.field("members").type.value_type
+            id_type = member_t.field("doc_id").type
+            words = [f.name for f in member_t if f.name != "doc_id"]
+            out_a, out_b, out_h = [], [], []
+            for members in batch.column("members").to_pylist():
+                live = [m for m in members if all(m[w] is not None for w in words)]
+                n = len(live)
+                if n < 2:
+                    continue
+                ids_np = np.array([m["doc_id"] for m in live])
+                fps = []
+                for w in words:
+                    v = np.array([m[w] for m in live], dtype=np.int64)
+                    if v.min() < 0 or v.max() >= 1 << 32:
+                        raise ValueError(
+                            f"fingerprint field {w!r} holds a value outside"
+                            " [0, 2^32); each Hamming word must be one packed"
+                            " 32-bit word"
+                        )
+                    fps.append(v.astype(np.uint32))
+                rows_per_chunk = max(CHUNK_SLOTS // n, 1)
+                for lo in range(0, n - 1, rows_per_chunk):
+                    hi = min(lo + rows_per_chunk, n - 1)
+                    hm = pair_popcount(fps[0], lo, hi)
+                    for f in fps[1:]:
+                        hm += pair_popcount(f, lo, hi)
+                    # upper triangle only: column index > global row index
+                    mask = hm <= max_hamming
+                    cols = np.arange(n)[None, :]
+                    rows = np.arange(lo, hi)[:, None]
+                    mask &= cols > rows
+                    ri, ci = np.nonzero(mask)
+                    if len(ri):
+                        out_a.extend(ids_np[ri + lo].tolist())
+                        out_b.extend(ids_np[ci].tolist())
+                        out_h.extend(hm[ri, ci].tolist())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(out_a, type=id_type),
+                    pa.array(out_b, type=id_type),
+                    pa.array(out_h, type=pa.int32()),
+                ],
+                ["doc_a", "doc_b", "hamming"],
+            )
+
+    return run
 
 
 def _shingle_h60_batches(it):
@@ -902,6 +915,10 @@ N_SIMHASH_BITS = 32
 SIMHASH_BAND_BITS = 8
 N_SIMHASH_BANDS = N_SIMHASH_BITS // SIMHASH_BAND_BITS  # 4 bands
 SIMHASH_MAX_HAMMING = N_SIMHASH_BANDS - 1  # pigeonhole-exact radius
+# fingerprint columns, one packed non-negative 32-bit word each:
+# ``simhash``, and the low/high words of ``simhash_wide``
+_NARROW_WORDS = ("simhash",)
+_WIDE_WORDS = ("fp_lo", "fp_hi")
 
 # loud-failure bound for a single Hamming band bucket, derived from the
 # in-bucket PAIR expansion the bucket would cost (n*(n-1)/2), not raw
@@ -922,6 +939,19 @@ def _members_for_pair_budget(budget: int) -> int:
 SIMHASH_GUARD_MAX = _members_for_pair_budget(SIMHASH_BUCKET_PAIR_BUDGET)  # ~4472
 
 
+def _fingerprints(spark, sf_dir, cols):
+    """(doc_id, *cols) SimHash fingerprints, one packed 32-bit word per
+    name in ``cols`` (``_simhash_batches``): one zero-shuffle mapInArrow
+    stage over the spread scan, and only (doc_id, text) crosses the
+    Python boundary."""
+    from ..pipeline.session import ensure_package_on_workers
+
+    ensure_package_on_workers(spark)
+    d, id_t = _spread_docs(spark, sf_dir)
+    schema = ", ".join([f"doc_id {id_t}"] + [f"{c} bigint" for c in cols])
+    return d.mapInArrow(_simhash_batches(cols), schema)
+
+
 def simhash(spark, sf_dir):
     """SimHash: per-word portable hash, signed bit-count vote per bit,
     packed into a 32-bit fingerprint.
@@ -935,13 +965,8 @@ def simhash(spark, sf_dir):
     array-native ``aggregate()`` HOF measured 8.3 s at sf1.0/local[32]
     (higher-order functions are CodegenFallback: interpreted md5+conv
     plus a fresh 33-element array per word); an explode+codegen
-    HashAggregate rewrite reached 5.1 s; this form ~1 s.  Only
-    (doc_id, text) crosses the Python boundary."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    return d.mapInArrow(_simhash_batches, f"doc_id {id_t}, simhash bigint")
+    HashAggregate rewrite reached 5.1 s; this form ~1 s."""
+    return _fingerprints(spark, sf_dir, _NARROW_WORDS)
 
 
 def _simhash_sql() -> str:
@@ -957,39 +982,84 @@ SELECT doc_id, CAST({terms} AS BIGINT) AS simhash FROM h
 """
 
 
-def simhash_neardup_pairs(spark, sf_dir):
-    """SimHash consumer: near-dup pairs at Hamming distance <=
-    ``SIMHASH_MAX_HAMMING``, found by Hamming-band LSH.
+def _wide_band_value(b: int, band_bits: int, shl, shr, cols=_WIDE_WORDS) -> str:
+    """Band ``b``'s value (bits [b*band_bits, (b+1)*band_bits) of the
+    fingerprint) from its packed 32-bit words ``cols``, low word first
+    — at most TWO fingerprint-column references (shift+mask,
+    straddle-aware), so even a worst-case Catalyst inline of the vote
+    aggregate duplicates a linear pass a bounded number of times, never
+    per-bit.  ``shl`` / ``shr`` are callables rendering the engine's
+    shift syntax."""
+    start, end = b * band_bits, (b + 1) * band_bits
+    mask = (1 << band_bits) - 1
+    w, off = divmod(start, 32)
+    if end <= 32 * (w + 1):
+        return f"({shr(cols[w], off)} & {mask})"
+    n_lo = 32 - off  # straddling band: low bits from word w, rest w + 1
+    return (
+        f"(({shr(cols[w], off)} & {(1 << n_lo) - 1})"
+        f" + {shl(f'({cols[w + 1]} & {(1 << (band_bits - n_lo)) - 1})', n_lo)})"
+    )
 
-    The 32-bit fingerprint is split into 4 disjoint 8-bit bands and
-    docs are equi-joined on (band, band value) — by pigeonhole, any
-    pair within Hamming distance 3 agrees exactly on at least one of
-    the 4 bands, so the banding is EXACT (recall 1.0) for that radius;
-    the per-candidate ``bit_count(a ^ b)`` filter removes the false
-    positives.  Same single-shuffle shape as ``lsh_candidate_pairs``;
-    at 10^12 docs you widen to a 64-bit fingerprint with 16-bit bands
-    so each band has 65k buckets.
+
+def _wide_band_value_spark(b: int, band_bits: int, cols=_WIDE_WORDS) -> str:
+    return _wide_band_value(
+        b,
+        band_bits,
+        lambda e, k: f"shiftleft({e}, {k})",
+        lambda e, k: f"shiftright({e}, {k})",
+        cols,
+    )
+
+
+def _wide_band_value_duck(b: int, band_bits: int) -> str:
+    return _wide_band_value(
+        b,
+        band_bits,
+        lambda e, k: f"({e} << {k})",
+        lambda e, k: f"({e} >> {k})",
+    )
+
+
+def _hamming_bands(fp, cols, band_bits, n_bands, *keep):
+    """One (doc_id, *keep, band, value) row per doc and band: band b
+    holds fingerprint bits [b*band_bits, (b+1)*band_bits) of the packed
+    words ``cols``."""
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.expr(_wide_band_value_spark(b, band_bits, cols)).alias("value"),
+        )
+        for b in range(n_bands)
+    ]
+    exploded = fp.select("doc_id", *keep, F.explode(F.array(*bands)).alias("bb"))
+    return exploded.select("doc_id", *keep, "bb.band", "bb.value")
+
+
+def _hamming_band_pairs(fp, cols, band_bits, n_bands):
+    """Near-dup pairs at Hamming distance <= n_bands - 1 over the
+    fingerprint words ``cols`` of ``fp``, found by Hamming-band LSH.
+
+    The fingerprint is split into ``n_bands`` disjoint ``band_bits``
+    bands and docs are grouped on (band, band value) — by pigeonhole,
+    any pair within Hamming distance n_bands - 1 agrees exactly on at
+    least one band, so the banding is EXACT (recall 1.0) for that
+    radius; the in-bucket popcount filter removes the false positives.
 
     NO bucket cap is allowed here — dropping a bucket would break the
     pigeonhole recall-1.0 guarantee — so instead of silently OOMing on
     a degenerate bucket, a window ``count`` sizes every bucket BEFORE
     any member list is collected and ``assert_true`` fails the job
-    LOUDLY at ``SIMHASH_GUARD_MAX`` with the remedy in the message
-    (run exact dedup first / widen the bands).  The guard sits in a
-    ``filter`` so Catalyst cannot prune it away."""
-    sig = simhash(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
-            .bitwiseAND((1 << SIMHASH_BAND_BITS) - 1)
-            .alias("value"),
-        )
-        for b in range(N_SIMHASH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id", "simhash", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "simhash", "bb.band", "bb.value")
+    LOUDLY at ``SIMHASH_GUARD_MAX`` (read at call time) with the remedy
+    in the message (run exact dedup first / widen the bands).  The
+    guard sits in a ``filter`` so Catalyst cannot prune it away.
+
+    Per-bucket pair expansion + Hamming filter run in ONE Arrow kernel
+    (``_bucket_hamming_batches``) that emits only qualifying pairs, so
+    the final distinct shuffles the output-sized survivor set, never
+    the ~n^2/2^band_bits in-bucket pairs (36 -> ~3 s at 50k docs against
+    an interpreted per-pair lambda expansion)."""
+    banded = _hamming_bands(fp, cols, band_bits, n_bands, *cols)
     sized = banded.withColumn(
         "n", F.count("*").over(Window.partitionBy("band", "value"))
     )
@@ -1013,26 +1083,49 @@ def simhash_neardup_pairs(spark, sf_dir):
         guarded.filter(F.col("n") > 1)
         .groupBy("band", "value")
         .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "simhash"))
-            ).alias("members")
+            F.sort_array(F.collect_set(F.struct("doc_id", *cols))).alias("members")
         )
     )
-    # r07 (guide §4.2): per-bucket pair expansion + Hamming filter in
-    # ONE Arrow kernel.  The lambda form materialized every in-bucket
-    # pair as an interpreted struct (~19M at 50k docs — avg bucket is
-    # n/2^band_bits) and ran DISTINCT on all of them before the
-    # hamming <= 3 filter; the kernel XOR/popcounts the bucket matrix
-    # in numpy and emits only qualifying pairs, so the dedup shuffle
-    # carries the output-sized survivor set.  36 -> ~3 s at 50k docs.
-    id_t = dict(sig.dtypes)["doc_id"]
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
+    id_t = dict(fp.dtypes)["doc_id"]
     pairs = buckets.select("members").mapInArrow(
-        _bucket_hamming_batches, f"doc_a {id_t}, doc_b {id_t}, hamming int"
+        _bucket_hamming_batches(n_bands - 1),
+        f"doc_a {id_t}, doc_b {id_t}, hamming int",
     )
     return pairs.distinct()
+
+
+def _hamming_band_stats(fp, cols, band_bits, n_bands):
+    """Per band of the Hamming-band join: bucket count, candidate-pair
+    mass and the largest bucket (bucket size = count(DISTINCT doc_id),
+    as the oracles define it)."""
+    banded = _hamming_bands(fp, cols, band_bits, n_bands)
+    sizes = banded.groupBy("band", "value").agg(
+        F.countDistinct("doc_id").alias("n")
+    )
+    pair_mass = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
+    return (
+        sizes.groupBy("band")
+        .agg(
+            F.count("*").cast("long").alias("n_buckets"),
+            F.sum(F.when(F.col("n") > 1, pair_mass).otherwise(0))
+            .cast("long")
+            .alias("candidate_pairs"),
+            F.max("n").cast("long").alias("max_bucket"),
+        )
+        .orderBy("band")
+    )
+
+
+def simhash_neardup_pairs(spark, sf_dir):
+    """SimHash consumer: near-dup pairs at Hamming distance <=
+    ``SIMHASH_MAX_HAMMING`` — the 32-bit fingerprint in 4 disjoint
+    8-bit bands through ``_hamming_band_pairs``.  At 10^12 docs you
+    widen to the 64-bit fingerprint with 16-bit bands
+    (``simhash_wide_neardup_pairs``, same builder) so each band has 65k
+    buckets."""
+    return _hamming_band_pairs(
+        simhash(spark, sf_dir), _NARROW_WORDS, SIMHASH_BAND_BITS, N_SIMHASH_BANDS
+    )
 
 
 def _simhash_neardup_sql() -> str:
@@ -1077,8 +1170,9 @@ def _with_planted(e):
 
 def _hyperplane_sig_batches(planes, keep_embedding: bool = False):
     """mapInArrow factory: per-vector hyperplane signature with the
-    EXACT sequential-fold dot of ``_sig_expr_spark`` (dimension-major
-    accumulation; strict > 0 per plane; null embedding -> null sig).
+    EXACT sequential-fold dot of the oracle's ``_sig_expr_duck``
+    (dimension-major accumulation; strict > 0 per plane; null
+    embedding -> null sig).
     ``keep_embedding`` passes the vector through for consumers that
     rerank candidates (the hyperplane ANN queries)."""
 
@@ -1342,9 +1436,6 @@ QUERIES = {
 }
 
 
-MLLIB_VERIFY_JACCARD = 0.5
-
-
 def mllib_minhash_pairs(spark, sf_dir):
     """Spark-ML LSH candidate stage + exact verify: HashingTF shingle
     vectors -> MinHashLSH.approxSimilarityJoin (the built-in
@@ -1523,33 +1614,8 @@ def simhash_band_stats(spark, sf_dir):
     that tells an operator when the band width must grow (at 10^12
     docs: 64-bit fingerprints, 16-bit bands) or exact dedup must run
     first (a giant bucket of identical boilerplate)."""
-    sig = simhash(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
-            .bitwiseAND((1 << SIMHASH_BAND_BITS) - 1)
-            .alias("value"),
-        )
-        for b in range(N_SIMHASH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.value")
-    sizes = banded.groupBy("band", "value").agg(
-        F.countDistinct("doc_id").alias("n")
-    )
-    pair_mass = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
-    return (
-        sizes.groupBy("band")
-        .agg(
-            F.count("*").cast("long").alias("n_buckets"),
-            F.sum(F.when(F.col("n") > 1, pair_mass).otherwise(0))
-            .cast("long")
-            .alias("candidate_pairs"),
-            F.max("n").cast("long").alias("max_bucket"),
-        )
-        .orderBy("band")
+    return _hamming_band_stats(
+        simhash(spark, sf_dir), _NARROW_WORDS, SIMHASH_BAND_BITS, N_SIMHASH_BANDS
     )
 
 
@@ -1584,11 +1650,11 @@ QUERIES["simhash_band_stats"] = (simhash_band_stats, _simhash_band_stats_sql())
 # band_bits ~ log2(n_docs): then 2^band_bits ~ n and candidate volume
 # stays ~ n_bands * n (linear), pinned by
 # tests/test_dedup.py::test_wide_bands_candidate_volume_scales_linearly.
-# The 32-bit/8-bit operators above stay as the oracle-checked
-# small-scale config; the 64-bit fingerprint + 16-bit bands below are
-# the corpus-scale path (2^16 buckets/band covers n ~ 10^5 per the
-# rule; beyond that, exact dedup upstream collapses the mass the
-# fingerprint can't spread).
+# The 32-bit/8-bit configuration above stays the oracle-checked
+# small-scale config; the 64-bit fingerprint + 16-bit bands below (same
+# builders, two fingerprint words) are the corpus-scale path (2^16
+# buckets/band covers n ~ 10^5 per the rule; beyond that, exact dedup
+# upstream collapses the mass the fingerprint can't spread).
 SIMHASH_WIDE_BITS = 64
 SIMHASH_WIDE_BAND_BITS = 16
 N_SIMHASH_WIDE_BANDS = SIMHASH_WIDE_BITS // SIMHASH_WIDE_BAND_BITS  # 4
@@ -1611,18 +1677,9 @@ def simhash_wide(spark, sf_dir):
     md5 hex chars 1-8 — bit-identical to ``simhash`` —, fp_hi = votes
     over hex chars 9-16 of the SAME md5).  Two non-negative bigints
     sidestep the int64 sign bit in both engines; Hamming distance is
-    bit_count(lo^lo') + bit_count(hi^hi').
-
-    Round-7: same Arrow kernel as ``simhash`` (guide §4.2) — one md5
-    per word yields both words' hash halves (digest bytes 0-3 / 4-7 ==
-    hex chars 1-8 / 9-16), numpy vote reduction per half."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    return d.mapInArrow(
-        _simhash_wide_batches, f"doc_id {id_t}, fp_lo bigint, fp_hi bigint"
-    )
+    bit_count(lo^lo') + bit_count(hi^hi').  Same Arrow kernel as
+    ``simhash``, with two words."""
+    return _fingerprints(spark, sf_dir, _WIDE_WORDS)
 
 
 def _simhash_wide_sql() -> str:
@@ -1647,109 +1704,20 @@ FROM h
 """
 
 
-def _wide_band_value(b: int, band_bits: int, shl, shr) -> str:
-    """Band ``b``'s value (bits [b*band_bits, (b+1)*band_bits) of the
-    64-bit fingerprint) from the (fp_lo, fp_hi) packed words — at most
-    TWO fingerprint-column references (shift+mask, straddle-aware), so
-    even a worst-case Catalyst inline of the vote aggregate duplicates
-    a linear pass a bounded number of times, never per-bit.  ``shl`` /
-    ``shr`` are callables rendering the engine's shift syntax."""
-    start, end = b * band_bits, (b + 1) * band_bits
-    mask = (1 << band_bits) - 1
-    if end <= 32:
-        return f"({shr('fp_lo', start)} & {mask})"
-    if start >= 32:
-        return f"({shr('fp_hi', start - 32)} & {mask})"
-    n_lo = 32 - start  # straddling band: low bits from fp_lo, rest fp_hi
-    return (
-        f"(({shr('fp_lo', start)} & {(1 << n_lo) - 1})"
-        f" + {shl(f'(fp_hi & {(1 << (band_bits - n_lo)) - 1})', n_lo)})"
-    )
-
-
-def _wide_band_value_spark(b: int, band_bits: int) -> str:
-    return _wide_band_value(
-        b,
-        band_bits,
-        lambda e, k: f"shiftleft({e}, {k})",
-        lambda e, k: f"shiftright({e}, {k})",
-    )
-
-
-def _wide_band_value_duck(b: int, band_bits: int) -> str:
-    return _wide_band_value(
-        b,
-        band_bits,
-        lambda e, k: f"({e} << {k})",
-        lambda e, k: f"({e} >> {k})",
-    )
-
-
-def simhash_wide_neardup_pairs(spark, sf_dir, band_bits: int = SIMHASH_WIDE_BAND_BITS):
+def simhash_wide_neardup_pairs(spark, sf_dir):
     """The corpus-scale Hamming-band join: 64-bit fingerprint, 4 bands
-    of ``band_bits`` (default 16) bits — 2^16 buckets per band instead
-    of 2^8, so candidate volume on a diverse corpus is n^2/65536 per
-    band and the log2(n) sizing rule (``recommended_band_bits``) keeps
-    it ~linear up to n ~ 10^5 per width step.  Pigeonhole recall is
-    still EXACT for Hamming distance <= 3 (any such pair agrees on one
-    of the 4 disjoint bands).  Same single-shuffle + window-count +
-    pair-budget ``assert_true`` guard shape as the 8-bit operator."""
-    wide = simhash_wide(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(_wide_band_value_spark(b, band_bits)).alias("value"),
-        )
-        for b in range(N_SIMHASH_WIDE_BANDS)
-    ]
-    banded = wide.select(
-        "doc_id", "fp_lo", "fp_hi", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "fp_lo", "fp_hi", "bb.band", "bb.value")
-    sized = banded.withColumn(
-        "n", F.count("*").over(Window.partitionBy("band", "value"))
-    )
-    guarded = sized.filter(
-        F.assert_true(
-            F.col("n") <= SIMHASH_GUARD_MAX,
-            F.concat(
-                F.lit("simhash wide Hamming band (band="),
-                F.col("band").cast("string"),
-                F.lit(", value="),
-                F.col("value").cast("string"),
-                F.lit(f") holds > {SIMHASH_GUARD_MAX} docs (pair budget"
-                      f" {SIMHASH_BUCKET_PAIR_BUDGET} pairs/bucket) — run"
-                      " exact dedup upstream; the fingerprint cannot spread"
-                      " identical content"),
-            ),
-        ).isNull()
-    )
-    buckets = (
-        guarded.filter(F.col("n") > 1)
-        .groupBy("band", "value")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "fp_lo", "fp_hi"))
-            ).alias("members")
-        )
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(members, (x, i) ->"
-                " transform(slice(members, i + 2, size(members)), y ->"
-                " struct(x.doc_id AS doc_a, y.doc_id AS doc_b,"
-                " x.fp_lo AS lo_a, x.fp_hi AS hi_a,"
-                " y.fp_lo AS lo_b, y.fp_hi AS hi_b))))"
-            )
-        ).alias("p")
-    ).select("p.*").distinct()
-    return (
-        pairs.withColumn(
-            "hamming",
-            F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)").cast("int"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_WIDE_MAX_HAMMING)
-        .select("doc_a", "doc_b", "hamming")
+    of 16 bits — 2^16 buckets per band instead of 2^8, so candidate
+    volume on a diverse corpus is n^2/65536 per band and the log2(n)
+    sizing rule (``recommended_band_bits``) keeps it ~linear up to
+    n ~ 10^5 per width step.  Pigeonhole recall is still EXACT for
+    Hamming distance <= 3 (any such pair agrees on one of the 4
+    disjoint bands).  Same builder as the 8-bit operator
+    (``_hamming_band_pairs``)."""
+    return _hamming_band_pairs(
+        simhash_wide(spark, sf_dir),
+        _WIDE_WORDS,
+        SIMHASH_WIDE_BAND_BITS,
+        N_SIMHASH_WIDE_BANDS,
     )
 
 
@@ -1777,40 +1745,16 @@ QUERIES["simhash_wide_neardup_pairs"] = (
 
 
 def simhash_wide_band_stats(spark, sf_dir):
-    """The wide-path twin of ``simhash_band_stats`` ("no silent
-    blowups"): per 16-bit band, bucket count, candidate-pair mass and
-    the largest bucket — the dashboard that shows the log2(n) width
-    rule holding (compare ``candidate_pairs`` against the 8-bit audit
-    on the same corpus) and tells an operator when exact dedup must
-    run first."""
-    wide = simhash_wide(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(
-                _wide_band_value_spark(b, SIMHASH_WIDE_BAND_BITS)
-            ).alias("value"),
-        )
-        for b in range(N_SIMHASH_WIDE_BANDS)
-    ]
-    banded = wide.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.value")
-    # (band, value, doc_id) is unique by construction (one fingerprint
-    # row per doc), so plain count == distinct count without the
-    # two-phase distinct aggregation
-    sizes = banded.groupBy("band", "value").agg(F.count("*").alias("n"))
-    pair_mass = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
-    return (
-        sizes.groupBy("band")
-        .agg(
-            F.count("*").cast("long").alias("n_buckets"),
-            F.sum(F.when(F.col("n") > 1, pair_mass).otherwise(0))
-            .cast("long")
-            .alias("candidate_pairs"),
-            F.max("n").cast("long").alias("max_bucket"),
-        )
-        .orderBy("band")
+    """``simhash_band_stats`` for the wide path ("no silent blowups"):
+    per 16-bit band, bucket count, candidate-pair mass and the largest
+    bucket — the dashboard that shows the log2(n) width rule holding
+    (compare ``candidate_pairs`` against the 8-bit audit on the same
+    corpus) and tells an operator when exact dedup must run first."""
+    return _hamming_band_stats(
+        simhash_wide(spark, sf_dir),
+        _WIDE_WORDS,
+        SIMHASH_WIDE_BAND_BITS,
+        N_SIMHASH_WIDE_BANDS,
     )
 
 

@@ -224,21 +224,6 @@ from .dedup import _duck_hash60, _spark_hash60  # noqa: E402
 _SEED_H_SPARK = _spark_hash60("CAST(vec_id AS STRING)")
 _SEED_H_DUCK = _duck_hash60("CAST(vec_id AS VARCHAR)")
 
-_CENT_COS = (
-    "(aggregate(zip_with(embedding, c.centroid, (x, y) -> CAST(x AS DOUBLE) * y),"
-    " 0D, (a, v) -> a + v)"
-    " / ({enorm} * sqrt(aggregate(transform(c.centroid, x -> x * x),"
-    " 0D, (a, v) -> a + v))))"
-).format(enorm=_NORM.format(v="embedding"))
-
-# argmax cell by (cosine, lower cell id) — struct ordering gives the
-# deterministic tie-break both engines agree on
-_ASSIGN_EXPR = (
-    f"(array_max(transform(cents, c -> struct({_CENT_COS} AS cc,"
-    f" -c.cell AS negcell))).negcell) * -1"
-)
-
-
 def _seed_centroid_rows(e, k: int) -> list:
     """The k hash-ranked seed vectors as driver-side (cell, centroid)
     rows.  The collect is broadcast-class by construction: the OLD plan
@@ -768,18 +753,6 @@ WIDE_HYPERPLANES = HYPERPLANES + _lcg_hyperplanes(
 )
 
 
-def _sig_expr_spark(vec: str, planes=None) -> str:
-    terms = []
-    for b, h in enumerate(planes if planes is not None else HYPERPLANES):
-        arr = "array(" + ", ".join(f"{x}D" for x in h) + ")"
-        dot = (
-            f"aggregate(zip_with({vec}, {arr},"
-            f" (x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, v) -> a + v)"
-        )
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << b} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
 def _sig_expr_duck(vec: str, planes=None) -> str:
     terms = []
     for b, h in enumerate(planes if planes is not None else HYPERPLANES):
@@ -795,7 +768,8 @@ def _sig_expr_duck(vec: str, planes=None) -> str:
 def _hyperplane_sig_df(spark, sf_dir, planes):
     """(vec_id, label, embedding, sig) via the Arrow signature kernel
     (dedup._hyperplane_sig_batches with embedding pass-through) over a
-    spread scan — bit-identical signatures to ``_sig_expr_spark``."""
+    spread scan — bit-identical signatures to the oracle's
+    ``_sig_expr_duck``."""
     from ..pipeline.session import ensure_package_on_workers
     from .common import spread
     from .dedup import _hyperplane_sig_batches
@@ -811,27 +785,29 @@ def _hyperplane_sig_df(spark, sf_dir, planes):
     )
 
 
-def ann_hyperplane_topk(spark, sf_dir):
-    """Label-free ANN blocking: random-hyperplane LSH (vector SimHash).
-    The corpus is bucketed by an 8-bit signature; the query scans only
-    buckets within Hamming distance HAMMING_PROBE of its own signature
-    (9 of 256 cells) and exact-reranks by cosine.  This is the blocking
-    that works when no IVF centroids / labels exist; at 10^9 vectors
-    widen the signature (e.g. 16-24 bits) so each bucket stays small.
-    Exactness note: candidates are pruned, never approximated — every
-    returned cosine is the true value.  r07: the signature is the Arrow
-    kernel (bit-exact fold parity), not the interpreted HOF chain."""
-    sig = _hyperplane_sig_df(spark, sf_dir, HYPERPLANES)
+def _hyperplane_topk(spark, sf_dir, planes, candidate: str):
+    """Top-``TOP_K`` neighbours of ``QUERY_VEC_ID`` by cosine among the
+    vectors whose hyperplane signature ``sig`` (over ``planes``) passes
+    the SQL predicate ``candidate`` against the query's ``qsig``.  The
+    query row is broadcast and the predicate is a map-side filter (no
+    join, no shuffle, one corpus scan + TakeOrdered).  Candidates are
+    pruned, never approximated: every returned cosine is exact.  The
+    signature is the Arrow kernel (bit-exact fold parity), not the
+    interpreted HOF chain."""
+    sig = _hyperplane_sig_df(spark, sf_dir, planes)
     q = sig.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec"), F.col("sig").alias("qsig")
     )
     cos = F.expr(_DOT.format(a="embedding", b="qvec")) / (
         F.expr(_NORM.format(v="embedding")) * F.expr(_NORM.format(v="qvec"))
     )
+    # rank by the RAW cosine (identical IEEE folds in both engines);
+    # floor-based rounding is output-only (round() is engine-divergent
+    # on doubles — text.py::_r)
     return (
         sig.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .filter(F.expr(f"bit_count(sig ^ qsig) <= {HAMMING_PROBE}"))
+        .filter(F.expr(candidate))
         .withColumn("cosine_raw", cos)
         .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(TOP_K)
@@ -840,6 +816,19 @@ def ann_hyperplane_topk(spark, sf_dir):
             "label",
             (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
         )
+    )
+
+
+def ann_hyperplane_topk(spark, sf_dir):
+    """Label-free ANN blocking: random-hyperplane LSH (vector SimHash).
+    The corpus is bucketed by an 8-bit signature; the query scans only
+    buckets within Hamming distance HAMMING_PROBE of its own signature
+    (9 of 256 cells) and exact-reranks by cosine.  This is the blocking
+    that works when no IVF centroids / labels exist; at 10^9 vectors
+    widen the signature (``ann_hyperplane_wide_topk``) so each bucket
+    stays small."""
+    return _hyperplane_topk(
+        spark, sf_dir, HYPERPLANES, f"bit_count(sig ^ qsig) <= {HAMMING_PROBE}"
     )
 
 
@@ -892,33 +881,9 @@ def _wide_band_match(sig: str, qsig: str) -> str:
 
 def ann_hyperplane_wide_topk(spark, sf_dir):
     """ANN with the 32-bit (32-hyperplane) signature, banded 4x8 bits:
-    candidates share >= 1 band with the query — evaluated as a
-    map-side filter against the broadcast query signature (no join, no
-    shuffle, one corpus scan + TakeOrdered).  Candidates are pruned,
-    never approximated: every returned cosine is exact.  r07: kernel
-    signature (see ann_hyperplane_topk)."""
-    sig = _hyperplane_sig_df(spark, sf_dir, WIDE_HYPERPLANES)
-    q = sig.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec"), F.col("sig").alias("qsig")
-    )
-    cos = F.expr(_DOT.format(a="embedding", b="qvec")) / (
-        F.expr(_NORM.format(v="embedding")) * F.expr(_NORM.format(v="qvec"))
-    )
-    # rank by the RAW cosine (identical IEEE folds in both engines);
-    # floor-based rounding is output-only (round() is engine-divergent
-    # on doubles — text.py::_r)
-    return (
-        sig.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .filter(F.expr(_wide_band_match("sig", "qsig")))
-        .withColumn("cosine_raw", cos)
-        .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select(
-            "vec_id",
-            "label",
-            (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
-        )
+    candidates share >= 1 band with the query (``_hyperplane_topk``)."""
+    return _hyperplane_topk(
+        spark, sf_dir, WIDE_HYPERPLANES, _wide_band_match("sig", "qsig")
     )
 
 

@@ -16,29 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
 def read_table(spark: SparkSession, location: str) -> DataFrame:
     """``catalog.db.table`` -> Iceberg/catalog table; anything else ->
     parquet path."""
     if "/" not in location and "." in location:
         return spark.read.table(location)
     return spark.read.parquet(location)
-
-
-def append_table(df: DataFrame, location: str) -> None:
-    if "/" not in location and "." in location:
-        df.writeTo(location).append()
-    else:
-        df.write.mode("append").parquet(location)
 
 
 def write_bucketed_corpus(

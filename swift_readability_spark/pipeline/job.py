@@ -312,12 +312,6 @@ def read_committed(
     )
 
 
-def committed_keys(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    """Partition keys already committed by any previous run."""
-    state = committed_state(spark, lineage_path)
-    return state[0] if state else None
-
-
 def committed_state(
     spark: SparkSession, lineage_path: str
 ) -> tuple[DataFrame, int | None] | None:

@@ -35,7 +35,6 @@ from ..core.dom import (
     Node,
     RAW_TEXT_TAGS,
     TextNode,
-    parse_fragment,
     parse_html,
 )
 
@@ -209,11 +208,6 @@ def html_to_spans(
     """Segment a full HTML document into an interleaved span sequence."""
     doc = parse_html(html, document_uri)
     return element_to_spans(doc, visibility_filter=visibility_filter)
-
-
-def fragment_to_spans(html: str) -> list[dict]:
-    """Segment an HTML fragment (e.g. extracted article content)."""
-    return element_to_spans(parse_fragment(html), visibility_filter=False)
 
 
 _IMAGE_EXTS = (

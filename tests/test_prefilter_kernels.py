@@ -116,52 +116,37 @@ def test_prefilter_missing_doc_raises(spark):
         out.collect()
 
 
-def _brute_hamming_pairs(members):
-    """Reference: all pairs with popcount(xor) <= SIMHASH_MAX_HAMMING,
-    doc_a < doc_b in member (sorted) order."""
+def _brute_hamming_pairs(members, words):
+    """Reference: all pairs whose popcount(xor) summed over the
+    fingerprint ``words`` is <= SIMHASH_MAX_HAMMING, doc_a < doc_b in
+    member (sorted) order; members with a null word are skipped."""
     out = []
-    live = [(m["doc_id"], m["simhash"]) for m in members if m["simhash"] is not None]
+    live = [
+        (m["doc_id"], [m[w] for w in words])
+        for m in members
+        if all(m[w] is not None for w in words)
+    ]
     for i in range(len(live)):
         for j in range(i + 1, len(live)):
-            h = bin(live[i][1] ^ live[j][1]).count("1")
+            h = sum(
+                bin(x ^ y).count("1") for x, y in zip(live[i][1], live[j][1])
+            )
             if h <= SIMHASH_MAX_HAMMING:
                 out.append((live[i][0], live[j][0], h))
     return out
 
 
-def test_bucket_hamming_chunking_matches_bruteforce():
-    """A bucket big enough to engage the row-chunk loop (n^2 > the 4M
-    slot budget) produces exactly the brute-force pair set — chunk
-    boundaries lose no pairs and duplicate none."""
-    rng = np.random.default_rng(3)
-    n = 2200  # n^2 = 4.84M slots -> 2+ chunks
-    # cluster fingerprints so qualifying pairs exist across the bucket
-    centers = rng.integers(0, 1 << 32, size=12, dtype=np.uint64)
-    fps = []
-    for i in range(n):
-        c = int(centers[i % 12])
-        if i % 3:
-            c ^= 1 << int(rng.integers(0, 32))  # hamming 1 from center
-        fps.append(c)
-    members = [
-        {"doc_id": i, "simhash": fp} for i, fp in enumerate(fps)
-    ]
-    members[100]["simhash"] = None  # null-fingerprint member skipped
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(
-                [members],
-                type=pa.list_(
-                    pa.struct(
-                        [("doc_id", pa.int64()), ("simhash", pa.int64())]
-                    )
-                ),
-            )
-        ],
-        ["members"],
+def _members_batch(members, words):
+    """One-row ``members`` batch: list<struct<doc_id, *words>>."""
+    fields = [("doc_id", pa.int64())] + [(w, pa.int64()) for w in words]
+    return pa.RecordBatch.from_arrays(
+        [pa.array([members], type=pa.list_(pa.struct(fields)))], ["members"]
     )
+
+
+def _run_hamming_kernel(batch):
     got = []
-    for ob in _bucket_hamming_batches([batch]):
+    for ob in _bucket_hamming_batches(SIMHASH_MAX_HAMMING)([batch]):
         got.extend(
             zip(
                 ob.column("doc_a").to_pylist(),
@@ -169,6 +154,44 @@ def test_bucket_hamming_chunking_matches_bruteforce():
                 ob.column("hamming").to_pylist(),
             )
         )
-    want = _brute_hamming_pairs(members)
+    return got
+
+
+@pytest.mark.parametrize(
+    "words", [("simhash",), ("fp_lo", "fp_hi")], ids=["one_word", "two_words"]
+)
+def test_bucket_hamming_chunking_matches_bruteforce(words):
+    """A bucket big enough to engage the row-chunk loop (n^2 > the 4M
+    slot budget) produces exactly the brute-force pair set — chunk
+    boundaries lose no pairs and duplicate none; with two fingerprint
+    words the distance is the popcount summed over both."""
+    rng = np.random.default_rng(3)
+    n = 2200  # n^2 = 4.84M slots -> 2+ chunks
+    k = len(words)
+    # cluster fingerprints so qualifying pairs exist across the bucket
+    centers = rng.integers(0, 1 << 32, size=(12, k), dtype=np.uint64)
+    members = []
+    for i in range(n):
+        fp = [int(x) for x in centers[i % 12]]
+        if i % 3:  # hamming 1 from center, in a random word
+            fp[int(rng.integers(0, k))] ^= 1 << int(rng.integers(0, 32))
+        members.append({"doc_id": i, **dict(zip(words, fp))})
+    members[100][words[-1]] = None  # null-fingerprint member skipped
+    got = _run_hamming_kernel(_members_batch(members, words))
+    want = _brute_hamming_pairs(members, words)
     assert sorted(got) == sorted(want)
     assert len(want) > 1000  # the cluster design must yield real mass
+    assert 100 not in {a for a, _, _ in got} | {b for _, b, _ in got}
+
+
+def test_bucket_hamming_rejects_word_over_32_bits():
+    """A fingerprint word >= 2^32 (e.g. a whole 64-bit fingerprint in
+    one field) raises naming the field instead of wrapping silently in
+    the uint32 cast."""
+    words = ("fp_lo", "fp_hi")
+    members = [
+        {"doc_id": 0, "fp_lo": 0, "fp_hi": 1 << 32},
+        {"doc_id": 1, "fp_lo": 0, "fp_hi": 0},
+    ]
+    with pytest.raises(ValueError, match="'fp_hi'"):
+        _run_hamming_kernel(_members_batch(members, words))
